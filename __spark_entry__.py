@@ -949,19 +949,8 @@ def q_corpus_verdicts(spark, sf_dir):
     allowed = (
         _t(spark, sf_dir, "documents").select("source").distinct()
     )
-    # hist_impl="jvm" (r06, revised): with validate_corpus now
-    # persisting its input for the multi-pass suite, the drift kernel
-    # reads cached token arrays and the JVM explode+agg wins (0.40s vs
-    # 0.54s arrow at sf1.0/32 cores; end-to-end A/B of this query:
-    # arrow/no-persist 2.50s, arrow/persist 2.12s, jvm/persist 2.04s).
-    # The earlier arrow pick only paid off when each pass re-tokenised
-    # from parquet. Both kernels are bit-identical (pinned by pytest);
-    # drift values don't enter this query's hash but the full suite
-    # stays ON.
     report = validate_corpus(
-        corpus,
-        allowed,
-        ValidationConfig(token_hist_bucket=16, hist_impl="jvm"),
+        corpus, allowed, ValidationConfig(token_hist_bucket=16)
     )
     return report.verdicts.select(
         "source",

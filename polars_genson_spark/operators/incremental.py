@@ -34,8 +34,10 @@ from ..config import InferenceConfig
 from ..functions import summary as S
 from ..functions.rewrite import postprocess_schema
 from .infer import (
+    CellCache,
     SchemaInferenceError,
     _apply_schema_uri,
+    _observe_cell,
 )
 
 STATE_NAME = "_schema_state.json"
@@ -204,24 +206,16 @@ def _grouped_partials(
     ``group string`` (the old shape) crashed Arrow conversion for any
     non-string group column (long shard ids, dates)."""
     grp_t = df.schema[group_col].dataType.simpleString()
+    # (group, cell) keys, same contract as the ungrouped fold's cache in
+    # infer.partition_summaries
+    cell_cache = CellCache()
 
     def partial_fold(
         batches: Iterator[pd.DataFrame],
     ) -> Iterator[pd.DataFrame]:
-        from .infer import _observe_cell
-
         nodes: dict[Any, dict] = {}
         counts: dict[Any, int] = {}
         errors: dict[Any, str | None] = {}
-        # first-occurrence (group, cell) cache — same contract as the
-        # ungrouped fold's cell cache in infer.partition_summaries:
-        # repeats can only bump object.count (never read by to_schema,
-        # stripped by summary_key), so they skip parse+observe and
-        # count via the cached flag; row order, per-group processed
-        # counts and strict-mode error indexes are exactly preserved.
-        # Byte-budgeted against adversarially-unique corpora.
-        cell_cache: dict[tuple, bool] = {}
-        cache_budget = 48 * 1024 * 1024
         for pdf in batches:
             for grp, cell in zip(pdf[group_col], pdf[column]):
                 if errors.get(grp) is not None:
@@ -234,16 +228,11 @@ def _grouped_partials(
                 node = nodes.setdefault(grp, S.new_summary())
                 try:
                     ok = _observe_cell(node, cell, cfg, counts.get(grp, 0))
-                    if ok:
-                        counts[grp] = counts.get(grp, 0) + 1
                 except SchemaInferenceError as e:
                     errors[grp] = str(e)
                     continue
-                if cache_budget > 0:
-                    cache_budget -= (
-                        len(cell) if isinstance(cell, str) else 0
-                    ) + 80
-                    cell_cache[key] = ok
+                counts[grp] = counts.get(grp, 0) + ok
+                cell_cache.put(key, ok)
         if nodes:
             yield pd.DataFrame(
                 {

@@ -152,6 +152,41 @@ def _observe_cell(
     return True
 
 
+# Approximate bytes of keys and values one task's cell cache may hold;
+# past it, cells are still computed but no longer cached, so a corpus of
+# unique documents cannot exhaust Python worker memory.
+CELL_CACHE_BYTES = 48 * 1024 * 1024
+
+
+def _chars(x: Any) -> int:
+    if isinstance(x, tuple):
+        return sum(map(_chars, x))
+    return len(x) if isinstance(x, str) else 0
+
+
+class CellCache(dict):
+    """Byte-budgeted first-occurrence cache of per-cell results inside
+    one Python task: the inference folds map a cell to its processed
+    flag, the normaliser maps it to its output text.
+
+    Create it where the plan is built and let the task function close
+    over it: every task unpickles its own empty copy, carrying the
+    ``CELL_CACHE_BYTES`` budget read at plan-build time. Each entry costs
+    the characters of its string key parts and string value plus 64
+    bytes of overhead; once the budget is spent, :meth:`put` stores
+    nothing more and lookups simply miss.
+    """
+
+    def __init__(self) -> None:
+        super().__init__()
+        self.budget = CELL_CACHE_BYTES
+
+    def put(self, key: Any, value: Any) -> None:
+        if self.budget > 0:
+            self.budget -= _chars(key) + _chars(value) + 64
+            self[key] = value
+
+
 def partition_summaries(
     df: DataFrame,
     column: str,
@@ -177,48 +212,36 @@ def partition_summaries(
         .where(F.col("doc").isNotNull() & (F.trim(F.col("doc")) != F.lit("")))
         .withColumn("pid", F.spark_partition_id())
     )
+    # Observing the SAME cell twice cannot change the summary beyond
+    # ``object.count``, which to_schema never reads and summary_key
+    # strips, so repeats skip the parse+observe and only bump
+    # ``processed`` via the cached flag. Row order, processed_count and
+    # strict-mode error indexes are preserved: a failing cell raises at
+    # its first occurrence and is never cached.
+    cell_cache = CellCache()
 
     def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         node = S.new_summary()
         processed = 0
         pid = -1
         error: str | None = None
-        # First-occurrence cell cache (guide §1.2 step 2, per-task work):
-        # observing the SAME cell string twice cannot change the summary
-        # beyond ``object.count`` bookkeeping, which to_schema never
-        # reads and summary_key strips (verified: no other consumer) —
-        # so repeats skip the parse+observe entirely and only bump
-        # ``processed``. Row order, processed_count, and strict-mode
-        # error indexes are exactly preserved: rows are still walked in
-        # order, a failing cell was never cached (it raises at its first
-        # occurrence, as before), and each repeat counts via the cached
-        # processed-flag. Bounded so adversarially-unique corpora cannot
-        # blow worker memory; misses fall through to the normal path.
-        # Measured: 1M one-row-group events props (100 distinct shapes)
-        # 2.38s -> 1.28s best-of-3 at 32 cores, identical schema +
-        # processed_count.
-        cell_cache: dict[str, bool] = {}
-        cache_budget = 48 * 1024 * 1024  # approx bytes of cached keys
         for pdf in batches:
             if len(pdf) and pid < 0:
                 pid = int(pdf["pid"].iloc[0])
             if error is not None:
                 continue
-            for i, cell in enumerate(pdf["doc"]):
+            for cell in pdf["doc"]:
                 hit = cell_cache.get(cell)
                 if hit is not None:
                     processed += hit
                     continue
                 try:
                     ok = _observe_cell(node, cell, cfg, processed)
-                    if ok:
-                        processed += 1
                 except SchemaInferenceError as e:
                     error = str(e)
                     break
-                if cache_budget > 0:
-                    cache_budget -= len(cell) + 64
-                    cell_cache[cell] = ok
+                processed += ok
+                cell_cache.put(cell, ok)
         if pid >= 0 or processed:
             yield pd.DataFrame(
                 {

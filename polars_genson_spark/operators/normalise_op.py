@@ -8,12 +8,20 @@ forced to Avro, then each row is re-parsed and coerced by
 the 2× slowdown measured in bench/README.md:135-139), decode here reuses
 the SAME Avro schema to build the Spark ``StructType`` — single pass.
 
+One plan shape, whatever the input: an iterator-form pandas UDF runs the
+compiled normaliser over every row, then ``from_json`` decodes it when
+asked. Replicated documents are absorbed by the per-task first-occurrence
+cell cache (``infer.CellCache``), so the call adds no distinct pass, join
+or checkpoint, and building the plan launches no Spark job once the
+schema is known.
+
 Scale: the schema is a broadcast of a KB-sized dict; normalisation is
 embarrassingly parallel (no shuffle); `from_json` decode is JVM-side.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import json
 from typing import Any, Iterator
 
@@ -24,7 +32,7 @@ from pyspark.sql import functions as F
 from ..config import InferenceConfig, NormaliseConfig
 from ..functions.bridge import avro_to_spark_schema
 from ..functions.normalise import compile_document_normaliser
-from .infer import InferenceResult, infer_json_schema, _loads
+from .infer import CellCache, InferenceResult, infer_json_schema, _loads
 
 
 def normalise_json(
@@ -45,101 +53,34 @@ def normalise_json(
     norm = norm or NormaliseConfig(wrap_root=config.wrap_root)
     out_name = output_col or column
 
-    # Distinct-route decision FIRST (details at the route below): when
-    # it fires, schema inference also runs over the checkpointed
-    # DISTINCT cells — the inferred schema is replication-invariant
-    # (object.count never reaches to_schema; pinned by
-    # tests/test_r06_dedup_routes.py), and normalise_json only consumes
-    # .schema, so inferring over 1k distinct docs instead of 100k rows
-    # removes the dominant part of this call's cost on replicated
-    # corpora. Strict-mode inference still raises on any invalid cell
-    # (it is present in the distinct set too); only the row index in
-    # the error text refers to the distinct stream.
-    dedup_candidate = (
-        "__pgs_cell" not in df.columns
-        and "__pgs_norm" not in df.columns
-        # tiny frames (unit replays, the <=100-row decode queries) skip
-        # the sampling job outright: partition count is a free proxy
-        # for "big enough that one extra small job can pay for itself"
-        and df.rdd.getNumPartitions() >= 8
-    )
-    sample_cap = 10_000
-    if dedup_candidate:
-        s = (
-            df.select(F.col(column).alias("__pgs_cell"))
-            .limit(sample_cap)
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.approx_count_distinct("__pgs_cell").alias("d"),
-            )
-            .first()
-        )
-        dedup_candidate = s["n"] >= sample_cap and s["d"] <= 0.5 * s["n"]
-    uniq = None
-    if dedup_candidate:
-        # materialise the distinct cells ONCE (localCheckpoint): the
-        # safety count, the optional inference pass, and the broadcast
-        # build all read it without recomputing the distinct shuffle.
-        # A lying sample wastes this rollup but never produces a wrong
-        # answer or an oversized broadcast (budget check below).
-        uniq = (
-            df.select(F.col(column).alias("__pgs_cell"))
-            .where(F.col("__pgs_cell").isNotNull())
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        # broadcast-relation budget, not a tuning knob: past this the
-        # executors would each hold the full mapped table
-        if uniq.count() > 200_000:
-            uniq = None
-
     if avro_schema is None:
         # single inference pass, Avro forced (expressions.rs:489-511)
-        import dataclasses
-
         avro_cfg = dataclasses.replace(config, avro=True)
-        infer_src = uniq if uniq is not None else df
-        infer_col = "__pgs_cell" if uniq is not None else column
-        avro_schema = infer_json_schema(
-            infer_src, infer_col, avro_cfg
-        ).schema
+        avro_schema = infer_json_schema(df, column, avro_cfg).schema
 
-    spark = df.sparkSession
-    schema_bc = spark.sparkContext.broadcast(json.dumps(avro_schema))
-    # norm rides the UDF closure directly: it is a tiny picklable
-    # dataclass, and the old field-by-field tuple round-trip silently
-    # dropped any config field it didn't enumerate
-    cfg = norm
+    schema_bc = df.sparkSession.sparkContext.broadcast(json.dumps(avro_schema))
 
+    # normalisation is a pure function of the cell under a fixed schema
+    # and config, so a repeated document string reuses its first output
+    cell_cache = CellCache()
     _MISS = object()
 
     @F.pandas_udf("string")
     def _normalise(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        # Iterator form (guide §4.5): the compiled kernel
-        # (functions/normalise.py round-6 note) is built ONCE PER TASK
-        # and amortised over every Arrow batch, instead of once per
-        # 10k-row batch — pinned bit-identical to normalise_document by
-        # tests/test_normalise_compiled.py + the snapshot replays.
-        # The cell->output cache skips the parse+normalise+dumps chain
-        # for repeated document strings (normalisation is a pure
-        # function of the cell under a fixed schema+config); bounded by
-        # a byte budget so huge-cardinality corpora cannot blow worker
-        # memory. Replicated-doc corpora (the reference's own labels
-        # macro bench is 1000 distinct docs x 100 copies) collapse to
-        # one kernel run per distinct doc.
+        # Iterator form: the compiled kernel is built once per task and
+        # amortised over every Arrow batch (pinned bit-identical to
+        # normalise_document by tests/test_normalise_compiled.py).
         kernel = compile_document_normaliser(
-            json.loads(schema_bc.value), cfg
+            json.loads(schema_bc.value), norm
         )
         dumps = json.dumps
-        cache: dict[str, str | None] = {}
-        budget = 48 * 1024 * 1024  # approx bytes of cached keys+values
 
         def one(cell: str | None) -> str | None:
             # blank/unparseable cells normalise to null rather than
             # aborting the task — violations surface as rows (SURVEY §3.2)
             if cell is None or not cell.strip():
                 return None
-            hit = cache.get(cell, _MISS)
+            hit = cell_cache.get(cell, _MISS)
             if hit is not _MISS:
                 return hit
             try:
@@ -148,10 +89,7 @@ def normalise_json(
                 out = None
             else:
                 out = dumps(kernel(doc), separators=(",", ":"))
-            nonlocal budget
-            if budget > 0:
-                budget -= len(cell) + (len(out) if out else 0) + 64
-                cache[cell] = out
+            cell_cache.put(cell, out)
             return out
 
         for col in batches:
@@ -176,41 +114,11 @@ def normalise_json(
             avro_schema, kv_encoding=norm.map_encoding == MAP_ENCODING_KV
         )
 
-    dedup_map = None
-    if uniq is not None:
-        # distinct-route (guide §8 "decide with small rows"): the
-        # Python kernel — and the from_json decode — run once per
-        # DISTINCT cell (the checkpointed `uniq`); rows receive their
-        # result through the broadcast join below. Route choice cannot
-        # change results: normalisation is a pure function of the cell
-        # under a fixed schema+config (pinned by
-        # tests/test_r06_dedup_routes.py: route parity plain + decode,
-        # null/blank/unparseable via the join).
-        dedup_map = uniq.withColumn(
-            "__pgs_norm", _normalise(F.col("__pgs_cell"))
+    result = df.withColumn(out_name, _normalise(F.col(column)))
+    if dtype is not None:
+        result = result.withColumn(
+            out_name, F.from_json(F.col(out_name), dtype)
         )
-        if dtype is not None:
-            dedup_map = dedup_map.withColumn(
-                "__pgs_norm", F.from_json(F.col("__pgs_norm"), dtype)
-            )
-
-    if dedup_map is not None:
-        result = (
-            df.join(
-                F.broadcast(dedup_map),
-                F.col(column) == F.col("__pgs_cell"),
-                "left",
-            )
-            .drop("__pgs_cell")
-            .withColumn(out_name, F.col("__pgs_norm"))
-            .drop("__pgs_norm")
-        )
-    else:
-        result = df.withColumn(out_name, _normalise(F.col(column)))
-        if dtype is not None:
-            result = result.withColumn(
-                out_name, F.from_json(F.col(out_name), dtype)
-            )
 
     if decode and unnest:
         other = [c for c in result.columns if c != out_name]
@@ -225,8 +133,6 @@ def normalise_json_with_result(
     norm: NormaliseConfig | None = None,
 ) -> tuple[DataFrame, InferenceResult]:
     """Like :func:`normalise_json` but also returns the inference result."""
-    import dataclasses
-
     config = config or InferenceConfig()
     avro_cfg = dataclasses.replace(config, avro=True)
     res = infer_json_schema(df, column, avro_cfg)

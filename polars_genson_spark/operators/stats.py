@@ -59,126 +59,30 @@ def token_length_histogram(
 
 
 def token_id_histogram(
-    df: DataFrame,
-    cfg: ValidationConfig | None = None,
-    use_arrow: bool | None = None,
+    df: DataFrame, cfg: ValidationConfig | None = None
 ) -> DataFrame:
     """Histogram of token *values* per source for drift tests:
-    (source, bucket, cnt) with bucket = token_id // (vocab/buckets).
+    (source, bucket, cnt) with bucket = floor(token_id / (vocab/buckets)).
 
-    Two kernels, selected by ``cfg.hist_impl`` (or the ``use_arrow``
-    override); both shuffle ≤ |sources| × buckets × partitions rows —
-    independent of corpus size, the plan that survives 100 TB:
-
-    - ``"jvm"`` (default): Catalyst explode + two-phase hash aggregate —
-      partial agg runs before the exchange, the whole pipeline stays in
-      whole-stage codegen. Best parallel scaling (no Python transfer) and
-      fastest at high parallelism.
-    - ``"arrow"``: one ``mapInArrow`` pass — token arrays are flattened
-      zero-copy per batch (``ListArray.flatten``) and reduced with
-      ``np.bincount`` keyed by dictionary-encoded source (no per-row
-      Python). ~3× faster per core at low parallelism, but pays the Arrow
-      transfer of the tokens column to Python workers.
+    Catalyst explode + two-phase hash aggregate: the partial aggregate
+    runs before the exchange and the whole pipeline stays in whole-stage
+    codegen, so the shuffle carries at most |sources| × buckets ×
+    partitions rows, independent of corpus size, and no token crosses
+    into a Python worker.
     """
     cfg = cfg or ValidationConfig()
     width = max(1, cfg.vocab_size // cfg.token_id_buckets)
-    src_col, tok_col = cfg.source_col, cfg.tokens_col
-    if use_arrow is None:
-        use_arrow = cfg.hist_impl == "arrow"
-
-    if not use_arrow:
-        tok = F.explode(F.col(tok_col)).alias("tok")
-        exploded = df.select(F.col(src_col), tok)
-        return (
-            exploded.groupBy(
-                src_col,
-                # floor division, NOT cast-truncation: cast truncates
-                # toward zero, silently merging negative (out-of-range)
-                # ids in (-width, 0) into valid bucket 0 — and diverging
-                # from the arrow kernel's // (floor), so the two
-                # "equivalent" kernels disagreed on corrupt shards
-                F.floor(F.col("tok") / width).alias("bucket"),
-            )
-            .agg(F.count(F.lit(1)).alias("cnt"))
+    tok = F.explode(F.col(cfg.tokens_col)).alias("tok")
+    return (
+        df.select(F.col(cfg.source_col), tok)
+        .groupBy(
+            cfg.source_col,
+            # floor division, NOT cast-truncation: cast truncates toward
+            # zero, silently merging negative (out-of-range) ids in
+            # (-width, 0) into valid bucket 0
+            F.floor(F.col("tok") / width).alias("bucket"),
         )
-
-    import numpy as np
-    import pyarrow as pa
-
-    n_buckets = (cfg.vocab_size + width - 1) // width
-
-    def hist_batches(batches):
-        import pyarrow.compute as pc
-
-        acc: dict[str, np.ndarray] = {}
-        extras: dict[str, dict[int, int]] = {}  # out-of-range buckets
-        for batch in batches:
-            src = batch.column(0)
-            toks = batch.column(1)
-            # flatten() honours offsets and skips null rows' values;
-            # null-length → 0 keeps np.repeat aligned with flatten().
-            flat = toks.flatten().to_numpy(zero_copy_only=False)
-            if flat.size == 0:
-                continue
-            lengths = pc.fill_null(pc.list_value_length(toks), 0).to_numpy(
-                zero_copy_only=False
-            ).astype(np.int64)
-            enc = pc.dictionary_encode(src)
-            codes = enc.indices.to_numpy(zero_copy_only=False).astype(
-                np.int64
-            )
-            names = enc.dictionary.to_pylist()
-            n_src = len(names)
-            if np.issubdtype(flat.dtype, np.floating):  # null elements
-                keep = ~np.isnan(flat)
-                # drop NaNs while keeping per-row source attribution
-                codes_rep = np.repeat(codes, lengths)[keep]
-                flat = flat[keep].astype(np.int64)
-            else:
-                codes_rep = np.repeat(codes, lengths)
-                flat = flat.astype(np.int64)
-            b = flat // width
-            in_range = (b >= 0) & (b < n_buckets) & (codes_rep >= 0)
-            combined = codes_rep[in_range] * n_buckets + b[in_range]
-            h = np.bincount(combined, minlength=n_src * n_buckets)
-            for i, name in enumerate(names):
-                part = h[i * n_buckets : (i + 1) * n_buckets]
-                if not part.any():
-                    continue
-                tot = acc.setdefault(name, np.zeros(n_buckets, np.int64))
-                tot += part
-            if not in_range.all():
-                oob = ~in_range
-                for code, bucket in zip(
-                    codes_rep[oob].tolist(), b[oob].tolist()
-                ):
-                    name = names[code] if code >= 0 else None
-                    ex = extras.setdefault(name, {})
-                    ex[bucket] = ex.get(bucket, 0) + 1
-        for s in set(acc) | set(extras):
-            h = acc.get(s)
-            buckets: list[int] = []
-            counts: list[int] = []
-            if h is not None:
-                nz = np.nonzero(h)[0]
-                buckets = nz.tolist()
-                counts = h[nz].tolist()
-            for v, cc in extras.get(s, {}).items():
-                buckets.append(v)
-                counts.append(cc)
-            yield pa.RecordBatch.from_pydict(
-                {
-                    src_col: pa.array([s] * len(buckets), pa.string()),
-                    "bucket": pa.array(buckets, pa.int64()),
-                    "cnt": pa.array(counts, pa.int64()),
-                }
-            )
-
-    partials = df.select(src_col, tok_col).mapInArrow(
-        hist_batches, f"{src_col} string, bucket long, cnt long"
-    )
-    return partials.groupBy(src_col, "bucket").agg(
-        F.sum("cnt").alias("cnt")
+        .agg(F.count(F.lit(1)).alias("cnt"))
     )
 
 

@@ -3,17 +3,23 @@ reference's core_test.py / merge_schemas_test.py behaviours (SURVEY.md §5)."""
 
 from __future__ import annotations
 
+import json
+
 import pytest
 
 from polars_genson_spark import (
     InferenceConfig,
     SchemaInferenceError,
     infer_json_schema,
+    infer_json_schema_by_group,
     infer_spark_schema,
+    normalise_json,
 )
+from polars_genson_spark.operators import infer as infer_mod
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from conftest import make_json_df
+from conftest import make_json_df, replicated_json_df
 
 
 F1 = [
@@ -301,3 +307,51 @@ def test_schema_uri_semantics(spark):
         InferenceConfig(schema_uri="https://example.com/my-schema"),
     ).schema
     assert custom["$schema"] == "https://example.com/my-schema"
+
+
+def test_infer_cell_cache_replication_invariant(spark):
+    df = replicated_json_df(spark, n_distinct=25, copies=500)
+    rep = infer_json_schema(df.repartition(16), "payload")
+    one = infer_json_schema(
+        df.select("payload").distinct().coalesce(1), "payload"
+    )
+    assert rep.schema == one.schema
+    assert rep.processed_count == 25 * 500
+    assert one.processed_count == 25
+
+
+def test_infer_cell_cache_error_index_first_occurrence(spark):
+    # an invalid cell must still raise, with the strict-mode error
+    # carrying its first-occurrence index semantics
+    rows = [(i, json.dumps({"k": i % 3})) for i in range(50)]
+    rows.append((50, "{broken"))
+    df = spark.createDataFrame(rows, "row_id long, payload string")
+    with pytest.raises(Exception) as ei:
+        infer_json_schema(df.coalesce(1), "payload")
+    assert "Invalid JSON" in str(ei.value)
+
+
+@pytest.mark.parametrize("budget", [0, 200])
+def test_cell_cache_budget_does_not_change_results(spark, monkeypatch, budget):
+    """An exhausted cell-cache budget only stops caching: inference,
+    grouped inference and normalisation give the default-budget output."""
+    df = (
+        replicated_json_df(spark, n_distinct=40, copies=50)
+        .withColumn("grp", F.col("row_id") % 3)
+        .repartition(4)
+    )
+
+    def run():
+        res = infer_json_schema(df, "payload")
+        by_group = infer_json_schema_by_group(df, "payload", "grp")
+        norm = normalise_json(df, "payload", output_col="norm")
+        return (
+            res.schema,
+            res.processed_count,
+            sorted(map(tuple, by_group.collect())),
+            sorted(map(tuple, norm.select("row_id", "norm").collect())),
+        )
+
+    default = run()
+    monkeypatch.setattr(infer_mod, "CELL_CACHE_BYTES", budget)
+    assert run() == default

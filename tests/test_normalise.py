@@ -5,14 +5,17 @@ from __future__ import annotations
 
 import json
 
+from pyspark.sql import functions as F
+
 from polars_genson_spark import (
     InferenceConfig,
     NormaliseConfig,
+    infer_json_schema,
     normalise_json,
 )
 from polars_genson_spark.functions.normalise import normalise_value
 
-from conftest import make_json_df
+from conftest import make_json_df, replicated_json_df
 
 
 def rows(df, col="json_data"):
@@ -133,3 +136,52 @@ def test_decode_unnest(spark):
         [(r["a"], r["b"]) for r in out.select("a", "b").collect()]
     )
     assert got == [(1, "x"), (2, None)]
+
+
+def test_normalise_nulls_blanks_unparseable(spark):
+    # null / blank / unparseable cells normalise to null on a wide input
+    base = [(i, json.dumps({"k": i % 5})) for i in range(12000)]
+    base += [(90001, None), (90002, "   "), (90003, "{not json")]
+    df = spark.createDataFrame(base, "row_id long, payload string")
+    # inference is strict on invalid JSON by design; hand the schema in
+    # so the test exercises the normalise stage's null handling alone
+    schema = infer_json_schema(
+        df.where(F.col("row_id") < 90000), "payload",
+        InferenceConfig(avro=True),
+    ).schema
+    a = (
+        normalise_json(
+            df.repartition(16), "payload", output_col="norm",
+            avro_schema=schema,
+        )
+        .where(F.col("row_id") > 90000)
+        .select("row_id", "norm")
+        .collect()
+    )
+    assert sorted((r.row_id, r.norm) for r in a) == [
+        (90001, None),
+        (90002, None),
+        (90003, None),
+    ]
+
+
+def test_normalise_with_schema_is_lazy(spark):
+    """With the schema given, building the plan runs no Spark job and
+    caches nothing, however wide or replicated the input."""
+    df = replicated_json_df(spark, n_distinct=40, copies=300).repartition(16)
+    schema = infer_json_schema(
+        df, "payload", InferenceConfig(avro=True)
+    ).schema
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = sc.getLocalProperty("spark.jobGroup.id")
+    jobs_before = set(tracker.getJobIdsForGroup(group))
+    cached_before = len(sc._jsc.getPersistentRDDs())
+
+    out = normalise_json(
+        df, "payload", output_col="norm", decode=True, avro_schema=schema
+    )
+
+    assert set(tracker.getJobIdsForGroup(group)) == jobs_before
+    assert len(sc._jsc.getPersistentRDDs()) == cached_before
+    assert out.count() == 12000

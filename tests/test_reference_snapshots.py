@@ -58,7 +58,9 @@ KNOWN_DIVERGENT = {
 
 def _snapshots():
     if not os.path.isdir(SNAP_DIR):
-        return []
+        reason = f"{SNAP_DIR} is absent: the 164 snapshot replays did not run"
+        skip = pytest.mark.skip(reason=reason)
+        return [pytest.param(None, id="missing", marks=skip)]
     return sorted(f for f in os.listdir(SNAP_DIR) if f.endswith(".snap"))
 
 
