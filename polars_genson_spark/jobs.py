@@ -640,24 +640,14 @@ def main(argv: list[str] | None = None) -> int:
         "tokenize",
         help="train a BPE tokenizer on a text corpus and emit the "
              "pre-tokenized (doc_id, tokens, n_tok, source) table that "
-             "`validate` consumes",
+             "`validate` consumes; the apply is one zero-shuffle "
+             "mapInPandas per-word loop whose cache is seeded with the "
+             "training rollup's words",
     )
     tk.add_argument("--input", required=True, help="documents parquet")
     tk.add_argument("--output", required=True, help="token table parquet")
     tk.add_argument("--n-merges", type=int, default=500)
     tk.add_argument("--max-words", type=int, default=50_000)
-    tk.add_argument(
-        "--apply-method",
-        choices=["inplace", "vector", "join"],
-        default="inplace",
-        help="inplace: zero-shuffle mapInPandas per-word loop with a "
-             "seeded per-word cache (the measured default — see the "
-             "BENCH.md round-5 kernel A/B); vector: mapInArrow "
-             "ragged-gather reassembly (bit-identical output, measured "
-             "slower: factorize re-hashes every occurrence); join: "
-             "posexplode + segment unique words only + regroup (two "
-             "corpus shuffles)",
-    )
 
     b = sub.add_parser("bench-one", help="one pinned throughput measurement")
     b.add_argument("--rows", type=int, required=True)
@@ -836,7 +826,6 @@ def main(argv: list[str] | None = None) -> int:
         if args.cmd == "tokenize":
             from .operators.tokenizer import (
                 bpe_tokenize_ids,
-                bpe_tokenize_ids_join,
                 train_bpe_with_vocab,
             )
 
@@ -847,17 +836,9 @@ def main(argv: list[str] | None = None) -> int:
                 max_words=args.max_words,
                 return_words=True,
             )
-            method = getattr(args, "apply_method", "inplace")
-            if method == "join":
-                toks = bpe_tokenize_ids_join(docs, merges, vocab)
-            else:
-                # seed the apply cache with the training rollup's words:
-                # segmented once on the driver, broadcast once per
-                # executor
-                toks = bpe_tokenize_ids(
-                    docs, merges, vocab, seed_words=words,
-                    impl="vector" if method == "vector" else "loop",
-                )
+            # seed the apply cache with the training rollup's words:
+            # segmented once on the driver, broadcast once per executor
+            toks = bpe_tokenize_ids(docs, merges, vocab, seed_words=words)
             if "source" in docs.columns:
                 toks = toks.join(
                     docs.select("doc_id", "source"), "doc_id"

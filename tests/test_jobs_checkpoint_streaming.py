@@ -63,6 +63,20 @@ def test_run_validation_resume_skips_unchanged(spark, tmp_path):
     assert "books" in manifest["partitions"]
 
 
+def test_config_fingerprint_ignores_perf_knobs():
+    """Tuning knobs (salting, example cap) must not invalidate resume
+    skips; rule knobs must."""
+    base = ckpt.config_fingerprint(ValidationConfig())
+    assert base == ckpt.config_fingerprint(
+        ValidationConfig(salt_buckets=99, max_violation_examples=5)
+    )
+    assert base != ckpt.config_fingerprint(ValidationConfig(max_seq_len=64))
+    assert base != ckpt.config_fingerprint(ValidationConfig(vocab_size=1000))
+    assert base != ckpt.config_fingerprint(
+        ValidationConfig(max_null_rate=0.5)
+    )
+
+
 def test_repartition_salted_spreads_heavy_source(spark):
     corpus = generate_corpus(spark, 20000, seed=4)
     cfg = ValidationConfig(salt_buckets=8)

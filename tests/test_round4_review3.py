@@ -174,25 +174,6 @@ def test_run_streaming_validation_default_path_validates(spark, tmp_path):
     assert out["shadow"]["passed"] is False
 
 
-def test_config_fingerprint_ignores_perf_knobs():
-    """Tuning knobs (shuffle partitions, salting, example cap) must not
-    invalidate resume skips; rule knobs must."""
-    from polars_genson_spark.checkpoint import config_fingerprint
-
-    base = config_fingerprint(ValidationConfig())
-    assert base == config_fingerprint(
-        ValidationConfig(
-            shuffle_partitions=7,
-            salt_buckets=99,
-            repartition_by_range=False,
-            max_violation_examples=5,
-        )
-    )
-    assert base != config_fingerprint(ValidationConfig(max_seq_len=64))
-    assert base != config_fingerprint(ValidationConfig(vocab_size=1000))
-    assert base != config_fingerprint(ValidationConfig(max_null_rate=0.5))
-
-
 def test_violation_write_bounded_counts_exact(spark, tmp_path):
     """max_violation_examples bounds the parquet EXAMPLES per
     (source, check) while verdict counts stay exact."""

@@ -6,12 +6,31 @@ from __future__ import annotations
 import pytest
 
 from polars_genson_spark.operators.tokenizer import (
+    _py_words,
     _segment,
     bpe_tokenize,
+    bpe_tokenize_ids,
     bpe_vocabulary,
     train_bpe,
+    train_bpe_with_vocab,
     word_counts,
 )
+
+# edge rows for the apply kernel: NULL, empty and whitespace-only text,
+# every ASCII whitespace separator, unicode (U+00A0 is not a split), a
+# NULL id
+TEXTS = [
+    ("d1", "the quick brown fox jumps over the lazy dog the the"),
+    ("d2", ""),
+    ("d3", None),
+    ("d4", "lower LOWER lowest low newer newest wide wider widest"),
+    ("d5", "tab\tsep\nnewline  multi   space\x0bvtab\fformfeed\rcr"),
+    ("d6", "ünïcødé wörds ünïcødé  nbsp-is-not-a-split"),
+    ("d7", "x"),
+    ("d8", "repeated repeated repeated repeated"),
+    (None, "null id row words here"),
+    ("d9", "   "),
+]
 
 
 @pytest.fixture(scope="module")
@@ -188,64 +207,6 @@ def test_driver_query_bpe_roundtrip_matches_oracle(spark):
     assert got == oracle and len(got) > 0
 
 
-def test_join_apply_matches_inplace(spark):
-    """The all-JVM join apply path must be row-for-row identical to the
-    in-place mapInPandas path — same ids, same token sequences — on real
-    docs plus the empty/NULL/whitespace edges the explode step drops."""
-    from pyspark.sql import functions as F
-
-    from polars_genson_spark.operators.tokenizer import (
-        bpe_tokenize_ids,
-        bpe_tokenize_ids_join,
-        train_bpe_with_vocab,
-    )
-
-    docs = spark.read.parquet(
-        "/root/testdata/sf0.001/documents.parquet"
-    ).select("doc_id", "text")
-    edges = spark.createDataFrame(
-        [(100001, ""), (100002, None), (100003, "   "), (100004, "one")],
-        "doc_id long, text string",
-    )
-    df = docs.unionByName(edges)
-    merges, vocab, words = train_bpe_with_vocab(
-        df, n_merges=40, return_words=True
-    )
-    inplace = {
-        r["doc_id"]: (r["tokens"], r["n_tok"])
-        for r in bpe_tokenize_ids(
-            df, merges, vocab, seed_words=words
-        ).collect()
-    }
-    joined = {
-        r["doc_id"]: (r["tokens"], r["n_tok"])
-        for r in bpe_tokenize_ids_join(df, merges, vocab).collect()
-    }
-    assert set(inplace) == set(joined)
-    assert inplace == joined
-    assert joined[100001] == ([], 0) and joined[100002] == ([], 0)
-
-
-def test_join_apply_rejects_duplicate_ids(spark):
-    """The join path's regroup is groupBy(id); duplicate ids would
-    silently interleave two docs' tokens, so it must fail loud (the
-    in-place path is row-wise and tolerates them)."""
-    from polars_genson_spark.operators.tokenizer import (
-        bpe_tokenize_ids,
-        bpe_tokenize_ids_join,
-        train_bpe_with_vocab,
-    )
-
-    df = spark.createDataFrame(
-        [(5, "a b"), (5, "c d"), (6, "e f")], "doc_id long, text string"
-    )
-    merges, vocab = train_bpe_with_vocab(df, n_merges=5)
-    with pytest.raises(ValueError, match="unique"):
-        bpe_tokenize_ids_join(df, merges, vocab)
-    # in-place: one output row per input row, duplicates preserved
-    assert bpe_tokenize_ids(df, merges, vocab).count() == 3
-
-
 def test_driver_bpe_roundtrip_excludes_literal_marker(spark):
     """A doc whose TEXT contains the literal '</w>' string is excluded
     from the roundtrip gate on both sides (after concat it is
@@ -269,33 +230,83 @@ def test_driver_bpe_roundtrip_excludes_literal_marker(spark):
     ).fetchone()[0]
 
 
-def test_join_apply_null_id_parity(spark):
-    """A single NULL-id row must tokenize identically through both apply
-    paths (the restore join is null-safe); two NULL-id rows hit the
-    duplicate-id guard (they regroup together)."""
-    from polars_genson_spark.operators.tokenizer import (
-        bpe_tokenize_ids,
-        bpe_tokenize_ids_join,
-        train_bpe_with_vocab,
-    )
+def _random_rows(n=300):
+    """Mixed-content docs: ascii words, numbers, URLs/punctuation runs,
+    unicode and long words."""
+    import random
 
-    df = spark.createDataFrame(
-        [(None, "low lower"), (1, "newest widest")],
-        "doc_id long, text string",
-    )
-    merges, vocab = train_bpe_with_vocab(df, n_merges=10)
-    a = {
-        r["doc_id"]: (r["tokens"], r["n_tok"])
-        for r in bpe_tokenize_ids(df, merges, vocab).collect()
-    }
-    b = {
-        r["doc_id"]: (r["tokens"], r["n_tok"])
-        for r in bpe_tokenize_ids_join(df, merges, vocab).collect()
-    }
-    assert a == b and a[None][1] > 0
+    rng = random.Random(20260819)
+    pieces = [
+        lambda: "".join(
+            rng.choice("abcdefghij") for _ in range(rng.randint(1, 12))
+        ),
+        lambda: str(rng.randint(0, 10**6)),
+        lambda: rng.choice(
+            ["http://ex.com/a?b=1", "foo_bar", "x+y=z", "…", "日本語"]
+        ),
+    ]
+    return [
+        (f"r{i}", " ".join(
+            rng.choice(pieces)() for _ in range(rng.randint(0, 30))
+        ))
+        for i in range(n)
+    ]
 
-    two_nulls = spark.createDataFrame(
-        [(None, "a b"), (None, "c d")], "doc_id long, text string"
-    )
-    with pytest.raises(ValueError, match="unique"):
-        bpe_tokenize_ids_join(two_nulls, merges, vocab)
+
+@pytest.fixture(scope="module")
+def apply_corpora(spark):
+    out = []
+    for rows, n_merges, parts in ((TEXTS, 60, None), (_random_rows(), 120, 7)):
+        df = spark.createDataFrame(rows, "doc_id string, text string")
+        if parts:
+            df = df.repartition(parts)
+        merges, vocab, words = train_bpe_with_vocab(
+            df, n_merges=n_merges, return_words=True
+        )
+        out.append((rows, df, merges, vocab, words))
+    return out
+
+
+def _key(rows):
+    return sorted((r[0] or "", list(r[1]), int(r[2])) for r in rows)
+
+
+@pytest.mark.parametrize("mode", ["seeded", "unseeded", "cache_max1"])
+def test_apply_matches_driver_reference(spark, apply_corpora, mode):
+    """Both apply flavors (token strings, token ids) equal a driver-side
+    reference built from ``_py_words`` + ``_segment``, with the cache
+    seeded, unseeded, or cleared on (almost) every unique word."""
+    for rows, df, merges, vocab, words in apply_corpora:
+        kw = {
+            "seeded": {"seed_words": words},
+            "unseeded": {},
+            "cache_max1": {"cache_max": 1},
+        }[mode]
+        ranks = {pair: i for i, pair in enumerate(merges)}
+        expect = [
+            (i or "", [s for w in _py_words(t) for s in _segment(w, ranks)])
+            for i, t in rows
+        ]
+        strs = bpe_tokenize(df, merges, **kw)
+        ids = bpe_tokenize_ids(df, merges, vocab, **kw)
+        assert _key(strs.collect()) == sorted(
+            (i, toks, len(toks)) for i, toks in expect
+        )
+        assert _key(ids.collect()) == sorted(
+            (i, [vocab.get(s, 0) for s in toks], len(toks))
+            for i, toks in expect
+        )
+        assert [f.simpleString() for f in strs.schema.fields] == [
+            "doc_id:string", "bpe_tokens:array<string>", "n_bpe:int",
+        ]
+        assert [f.simpleString() for f in ids.schema.fields] == [
+            "doc_id:string", "tokens:array<int>", "n_tok:int",
+        ]
+
+        empty = spark.createDataFrame([], "doc_id string, text string")
+        assert bpe_tokenize_ids(empty, merges, vocab, **kw).count() == 0
+        # row-wise: duplicate ids are neither merged nor dropped
+        dups = spark.createDataFrame(
+            [(5, "a b"), (5, "c d"), (6, "e f")], "doc_id long, text string"
+        )
+        assert bpe_tokenize_ids(dups, merges, vocab, **kw).count() == 3
