@@ -1,13 +1,12 @@
-"""The vectorized Arrow BPE apply kernel must be bit-identical to the
-reference per-word loop kernel.
+"""Columnar output of the BPE apply kernel, axis by axis.
 
-``tokenizer._make_apply_arrow`` replaces the per-word-occurrence Python
-loop with factorize + ragged-gather numpy index arithmetic and builds
-the output ListArray from offsets directly. Nothing about the output is
-allowed to change: same token streams, same counts, same handling of
-NULL/empty text, NULL ids, unicode words, seeded vs unseeded caches,
-and cache overflow. These tests pin loop↔vector equality on every one
-of those axes; the measured A/B lives in BENCH.md (round-5 section).
+The test names date from a second, vectorised (``mapInArrow``) apply
+kernel that these tests pinned to the ``mapInPandas`` loop; BENCH.md
+(round 5) measured it at 0.56x of the loop and it is removed. Each test
+now checks the one loop kernel against the driver-side reference
+(``_py_words`` + ``_segment``) on the axis its parity test covered:
+token strings, token ids, the unseeded cache, the output schema, the
+default plan, an empty corpus and a random mixed-content corpus.
 """
 
 from __future__ import annotations
@@ -19,23 +18,20 @@ from polars_genson_spark.operators.tokenizer import (
     bpe_tokenize_ids,
     train_bpe_with_vocab,
 )
-
-TEXTS = [
-    ("d1", "the quick brown fox jumps over the lazy dog the the"),
-    ("d2", ""),
-    ("d3", None),
-    ("d4", "lower LOWER lowest low newer newest wide wider widest"),
-    ("d5", "tab\tsep\nnewline  multi   space\x0bvtab\fformfeed\rcr"),
-    ("d6", "ünïcødé wörds ünïcødé  nbsp-is-not-a-split"),
-    ("d7", "x"),
-    ("d8", "repeated repeated repeated repeated"),
-    (None, "null id row words here"),
-    ("d9", "   "),
-]
+from test_tokenizer import TEXTS, _key, _random_rows, _reference
 
 
-def _key(rows):
-    return sorted((r[0] or "", list(r[1]), int(r[2])) for r in rows)
+def _expected_strings(rows, merges):
+    return sorted(
+        (i or "", toks, len(toks)) for i, toks in _reference(rows, merges)
+    )
+
+
+def _expected_ids(rows, merges, vocab):
+    return sorted(
+        (i or "", [vocab.get(s, 0) for s in toks], len(toks))
+        for i, toks in _reference(rows, merges)
+    )
 
 
 @pytest.fixture(scope="module")
@@ -49,39 +45,27 @@ def corpus(spark):
 
 def test_vector_matches_loop_token_strings(corpus):
     df, merges, _, words = corpus
-    loop = bpe_tokenize(df, merges, seed_words=words, impl="loop")
-    vec = bpe_tokenize(df, merges, seed_words=words, impl="vector")
-    assert _key(loop.collect()) == _key(vec.collect())
+    got = bpe_tokenize(df, merges, seed_words=words)
+    assert _key(got.collect()) == _expected_strings(TEXTS, merges)
 
 
 def test_vector_matches_loop_token_ids(corpus):
     df, merges, vocab, words = corpus
-    loop = bpe_tokenize_ids(df, merges, vocab, seed_words=words, impl="loop")
-    vec = bpe_tokenize_ids(df, merges, vocab, seed_words=words, impl="vector")
-    assert _key(loop.collect()) == _key(vec.collect())
+    got = bpe_tokenize_ids(df, merges, vocab, seed_words=words)
+    assert _key(got.collect()) == _expected_ids(TEXTS, merges, vocab)
 
 
 def test_vector_matches_loop_unseeded_cache(corpus):
     """No seed → every word goes through the cache path."""
     df, merges, vocab, _ = corpus
-    loop = bpe_tokenize_ids(df, merges, vocab, impl="loop")
-    vec = bpe_tokenize_ids(df, merges, vocab, impl="vector")
-    assert _key(loop.collect()) == _key(vec.collect())
-
-
-def test_vector_cache_overflow_clear(corpus):
-    """cache_max=1 forces a clear on (almost) every unique word — the
-    overflow path must not change output."""
-    df, merges, vocab, _ = corpus
-    loop = bpe_tokenize_ids(df, merges, vocab, cache_max=1, impl="loop")
-    vec = bpe_tokenize_ids(df, merges, vocab, cache_max=1, impl="vector")
-    assert _key(loop.collect()) == _key(vec.collect())
+    got = bpe_tokenize_ids(df, merges, vocab)
+    assert _key(got.collect()) == _expected_ids(TEXTS, merges, vocab)
 
 
 def test_vector_schema_and_dtypes(corpus):
     df, merges, vocab, words = corpus
-    vec = bpe_tokenize_ids(df, merges, vocab, seed_words=words)
-    assert [f.simpleString() for f in vec.schema.fields] == [
+    ids = bpe_tokenize_ids(df, merges, vocab, seed_words=words)
+    assert [f.simpleString() for f in ids.schema.fields] == [
         "doc_id:string",
         "tokens:array<int>",
         "n_tok:int",
@@ -93,14 +77,14 @@ def test_vector_schema_and_dtypes(corpus):
 
 
 def test_vector_is_default(corpus):
-    """The default impl IS the vector kernel (BENCH.md A/B: it wins),
-    and it equals the loop kernel output."""
+    """The default call applies BPE through the one ``mapInPandas``
+    kernel (no ``MapInArrow`` node in the plan) and gives the reference
+    output."""
     df, merges, vocab, words = corpus
     default = bpe_tokenize_ids(df, merges, vocab, seed_words=words)
-    loop = bpe_tokenize_ids(
-        df, merges, vocab, seed_words=words, impl="loop"
-    )
-    assert _key(default.collect()) == _key(loop.collect())
+    plan = default._jdf.queryExecution().analyzed().toString()
+    assert "MapInPandas" in plan and "MapInArrow" not in plan
+    assert _key(default.collect()) == _expected_ids(TEXTS, merges, vocab)
 
 
 def test_vector_empty_corpus(spark):
@@ -108,30 +92,17 @@ def test_vector_empty_corpus(spark):
     merges = [("t", "h"), ("th", "e</w>")]
     vocab = {"<unk>": 0, "</w>": 1, "t": 2, "h": 3, "e": 4,
              "th": 5, "the</w>": 6}
-    assert bpe_tokenize_ids(df, merges, vocab, impl="vector").count() == 0
+    assert bpe_tokenize_ids(df, merges, vocab).count() == 0
 
 
 def test_vector_random_parity(spark):
     """Random mixed-content corpus (ascii words, unicode, numbers,
-    punctuation runs, long words) — loop and vector agree exactly."""
-    import random
-
-    rng = random.Random(20260819)
-    alphabet = "abcdefghij"
-    pieces = [
-        lambda: "".join(rng.choice(alphabet) for _ in range(rng.randint(1, 12))),
-        lambda: str(rng.randint(0, 10**6)),
-        lambda: rng.choice(["http://ex.com/a?b=1", "foo_bar", "x+y=z", "…", "日本語"]),
-    ]
-    rows = []
-    for i in range(300):
-        n = rng.randint(0, 30)
-        text = " ".join(rng.choice(pieces)() for _ in range(n))
-        rows.append((f"r{i}", text))
+    punctuation runs, long words) over 7 partitions equals the
+    reference exactly."""
+    rows = _random_rows()
     df = spark.createDataFrame(rows, "doc_id string, text string").repartition(7)
     merges, vocab, words = train_bpe_with_vocab(
         df, n_merges=120, return_words=True
     )
-    loop = bpe_tokenize_ids(df, merges, vocab, seed_words=words, impl="loop")
-    vec = bpe_tokenize_ids(df, merges, vocab, seed_words=words, impl="vector")
-    assert _key(loop.collect()) == _key(vec.collect())
+    got = bpe_tokenize_ids(df, merges, vocab, seed_words=words)
+    assert _key(got.collect()) == _expected_ids(rows, merges, vocab)

@@ -271,6 +271,15 @@ def _key(rows):
     return sorted((r[0] or "", list(r[1]), int(r[2])) for r in rows)
 
 
+def _reference(rows, merges):
+    """Driver-side expected token strings, one (id, tokens) per row."""
+    ranks = {pair: i for i, pair in enumerate(merges)}
+    return [
+        (i, [s for w in _py_words(t) for s in _segment(w, ranks)])
+        for i, t in rows
+    ]
+
+
 @pytest.mark.parametrize("mode", ["seeded", "unseeded", "cache_max1"])
 def test_apply_matches_driver_reference(spark, apply_corpora, mode):
     """Both apply flavors (token strings, token ids) equal a driver-side
@@ -282,11 +291,7 @@ def test_apply_matches_driver_reference(spark, apply_corpora, mode):
             "unseeded": {},
             "cache_max1": {"cache_max": 1},
         }[mode]
-        ranks = {pair: i for i, pair in enumerate(merges)}
-        expect = [
-            (i or "", [s for w in _py_words(t) for s in _segment(w, ranks)])
-            for i, t in rows
-        ]
+        expect = [(i or "", toks) for i, toks in _reference(rows, merges)]
         strs = bpe_tokenize(df, merges, **kw)
         ids = bpe_tokenize_ids(df, merges, vocab, **kw)
         assert _key(strs.collect()) == sorted(
@@ -310,3 +315,73 @@ def test_apply_matches_driver_reference(spark, apply_corpora, mode):
             [(5, "a b"), (5, "c d"), (6, "e f")], "doc_id long, text string"
         )
         assert bpe_tokenize_ids(dups, merges, vocab, **kw).count() == 3
+
+
+def _ids_by_row(df, merges, vocab, **kw):
+    return {
+        r["doc_id"]: (r["tokens"], r["n_tok"])
+        for r in bpe_tokenize_ids(df, merges, vocab, **kw).collect()
+    }
+
+
+def _expected_ids(rows, merges, vocab):
+    return {
+        i: ([vocab.get(s, 0) for s in toks], len(toks))
+        for i, toks in _reference(rows, merges)
+    }
+
+
+def test_join_apply_matches_inplace(spark):
+    """The in-place apply is row-for-row the driver reference on long
+    ids, and the empty/NULL/whitespace rows an explode-based apply would
+    drop come back as ([], 0) instead of going missing. (Named for the
+    posexplode/regroup strategy once checked against it; BENCH.md
+    measured that strategy slower and it is removed.)"""
+    rows = [(i, t) for i, (_, t) in enumerate(_random_rows(), start=1)]
+    rows += [(100001, ""), (100002, None), (100003, "   "), (100004, "one")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    merges, vocab, words = train_bpe_with_vocab(
+        df, n_merges=40, return_words=True
+    )
+    got = _ids_by_row(df, merges, vocab, seed_words=words)
+    assert got == _expected_ids(rows, merges, vocab)
+    assert got[100001] == got[100002] == got[100003] == ([], 0)
+
+
+def test_join_apply_rejects_duplicate_ids(spark):
+    """Duplicate ids stay row-wise: each input row gives one output row
+    carrying its own text's tokens. A groupBy(id) regroup would
+    interleave two docs' tokens, which is why the removed join strategy
+    had to reject duplicate ids; the kept apply needs no such guard."""
+    rows = [(5, "a b"), (5, "c d"), (6, "e f")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    merges, vocab = train_bpe_with_vocab(df, n_merges=5)
+    got = sorted(
+        (r["doc_id"], r["tokens"])
+        for r in bpe_tokenize_ids(df, merges, vocab).collect()
+    )
+    assert len(got) == 3
+    assert got == sorted(
+        (i, [vocab.get(s, 0) for s in toks])
+        for i, toks in _reference(rows, merges)
+    )
+
+
+def test_join_apply_null_id_parity(spark):
+    """A NULL-id row tokenizes exactly like the driver reference, and two
+    NULL-id rows stay two rows, each with its own tokens."""
+    rows = [(None, "low lower"), (1, "newest widest")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    merges, vocab = train_bpe_with_vocab(df, n_merges=10)
+    got = _ids_by_row(df, merges, vocab)
+    assert got == _expected_ids(rows, merges, vocab) and got[None][1] > 0
+
+    two_nulls = [(None, "a b"), (None, "c d")]
+    out = bpe_tokenize_ids(
+        spark.createDataFrame(two_nulls, "doc_id long, text string"),
+        merges, vocab,
+    ).collect()
+    assert sorted(r["tokens"] for r in out) == sorted(
+        [vocab.get(s, 0) for s in toks]
+        for _, toks in _reference(two_nulls, merges)
+    )
